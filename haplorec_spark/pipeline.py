@@ -20,6 +20,25 @@ deliberately different — Spark-first, one shuffle per stage:
   a grouped applyInPandas kernel over (job, patient, gene) with the
   gene matrices broadcast (they are reference data, ~MBs).
 
+Pin policy — each stage is computed once, where the pipeline produces it,
+as the reference computes each ``job_patient_*`` table once in ``runJob``
+and every later rule and report reads the table back:
+
+* :meth:`Pipeline.run_job` pins every stage output as the dependency
+  graph produces it (seeded stages and the shared haplotype
+  classification included) with an eager ``localCheckpoint``: the stage
+  runs once, inside ``run_job``, and its lineage is cut, so downstream
+  stages, counts, reports and :meth:`Pipeline.materialize` all read
+  leaves that are already computed.
+* :class:`ReferenceTables` pins its tables lazily at construction (no
+  job runs until the first stage reads them) and derives ``gene_snp``
+  once, on first use.
+
+Pins are executor-local blocks: a pinned block lost with an executor
+fails the Spark job that reads it (there is no lineage left to recompute
+it from), and the caller re-runs the job. A pin's blocks are released
+once the DataFrames that hold it are garbage-collected.
+
 At 100 TB: job_patient_variant is the big table; every stage keys its
 shuffle on a prefix of (job_id, patient_id, gene_name, ...), so the
 group-count aggregates combine map-side, the reference tables broadcast,
@@ -30,7 +49,7 @@ absorbs).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,9 +66,21 @@ GROUP = ["job_id", "patient_id", "gene_name", "physical_chromosome",
          "het_combo", "het_combos"]
 
 
+def _pin(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and cut its lineage (eager localCheckpoint)."""
+    return df.localCheckpoint(eager=True)
+
+
 @dataclass
 class ReferenceTables:
-    """The five PharmGKB-derived reference tables (SURVEY.md §1.4)."""
+    """The five PharmGKB-derived reference tables (SURVEY.md §1.4).
+
+    Each table is pinned lazily at construction (``localCheckpoint(eager=
+    False)``): construction plans the tables and runs no job; the first
+    job that reads a table computes and keeps its blocks, and every later
+    stage and report reads those. Pass the same object to the pipeline
+    and the reports so they share the pins.
+    """
 
     gene_haplotype_variant: DataFrame
     genotype_phenotype: DataFrame
@@ -57,11 +88,23 @@ class ReferenceTables:
     genotype_drug_recommendation: DataFrame
     drug_recommendation: DataFrame | None = None
 
+    def __post_init__(self) -> None:
+        for f in fields(self):
+            df = getattr(self, f.name)
+            if df is not None:
+                setattr(self, f.name, df.localCheckpoint(eager=False))
+        self._gene_snp: DataFrame | None = None
+
     def gene_snp(self) -> DataFrame:
-        """The gene_snp distinct view (haplorec.sql.jinja:62-68)."""
-        return self.gene_haplotype_variant.select(
-            "gene_name", "snp_id"
-        ).distinct()
+        """The gene_snp distinct view (haplorec.sql.jinja:62-68), derived
+        and pinned on first use, then memoized. Pinning it at
+        construction would run its shuffle there (AQE executes a plan's
+        shuffles while planning the checkpoint)."""
+        if self._gene_snp is None:
+            self._gene_snp = self.gene_haplotype_variant.select(
+                "gene_name", "snp_id"
+            ).distinct().localCheckpoint(eager=False)
+        return self._gene_snp
 
 
 # --------------------------------------------------------------------------
@@ -79,9 +122,13 @@ def variant_to_het_variant(
     Work unit = one (job, patient, gene) group of 'het' variants whose
     SNPs belong to the gene (reference joins gene_snp,
     Pipeline.groovy:365-372); each group runs Algorithm.disambiguateHets
-    and emits combo-numbered rows. Invalid het input (a SNP without
-    exactly two alleles) raises, failing the job as the reference does
-    (Algorithm.groovy:76-85).
+    and emits combo-numbered rows.
+
+    Invalid het input (a SNP without exactly two alleles) raises in the
+    kernel, so it fails whatever computes this stage: ``Pipeline.run_job``
+    itself, which pins the stage as it builds it, as the reference fails
+    inside runJob (Algorithm.groovy:76-85). Called directly, the returned
+    DataFrame raises at its first action.
     """
     hets = (
         variant.filter(F.col("zygosity") == "het")
@@ -95,11 +142,9 @@ def variant_to_het_variant(
     # the executors: an all-hom job (the common large-batch case) costs
     # one tiny distinct, not a collect+broadcast of the whole
     # gene_haplotype_variant table.
-    hets = hets.persist()
     het_genes = [r.gene_name for r in
                  hets.select("gene_name").distinct().collect()]
     if not het_genes:
-        hets.unpersist()
         return spark.createDataFrame([], out_schema)
     bc = broadcast_matrices(
         spark,
@@ -249,7 +294,13 @@ def variant_to_gene_haplotype_and_novel_haplotype(
     variant: DataFrame, het_variant: DataFrame, ref: ReferenceTables
 ) -> tuple[DataFrame, DataFrame]:
     """(geneHaplotype, novelHaplotype) stage outputs."""
-    classified = _classified_haplotype_groups(variant, het_variant, ref)
+    return _split_classified(
+        _classified_haplotype_groups(variant, het_variant, ref)
+    )
+
+
+def _split_classified(classified: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(geneHaplotype, novelHaplotype) branches of one classification."""
     gene_haplotype = classified.filter(F.col("n_survivors") == 1).select(
         "job_id", "patient_id", "physical_chromosome", "het_combo",
         "het_combos", "gene_name", "haplotype_name",
@@ -378,32 +429,25 @@ class Pipeline:
 
     ``run_job`` mirrors Pipeline.runJob/pipelineJob: seed one or more
     stage tables from input, build everything downstream, return all
-    stage DataFrames keyed by stage alias. Stage tables all carry
-    ``job_id`` — at scale they are written partitioned by job_id with
-    per-partition overwrite for job re-runs (see
+    stage DataFrames keyed by stage alias. Like runJob, which writes each
+    ``job_patient_*`` table once, ``run_job`` computes each stage once and
+    pins it (see the module docstring): it returns after every stage has
+    run, and the returned DataFrames are computed leaves. Stage tables
+    all carry ``job_id`` — at scale they are written partitioned by
+    job_id with per-partition overwrite for job re-runs (see
     :meth:`materialize`), reproducing the reference's delete-and-rerun
     (Pipeline.groovy:567-576) without touching other jobs' partitions.
     """
-
-    #: Stages whose DataFrames feed more than one downstream consumer (or
-    #: are referenced several times within one plan — ``variant`` appears
-    #: in the work list, the hom side, and the het side of the haplotype
-    #: stage). Persisting them turns O(consumers) recomputations of the
-    #: shared lineage into one; the reference gets the same effect by
-    #: materializing every stage into a MySQL table.
-    PERSISTED_STAGES = ("variant", "hetVariant", "geneHaplotype", "genotype")
 
     def __init__(
         self,
         spark: SparkSession,
         ref: ReferenceTables,
         max_het_snps: int = 20,
-        persist_stages: bool = True,
     ) -> None:
         self.spark = spark
         self.ref = ref
         self.max_het_snps = max_het_snps
-        self.persist_stages = persist_stages
         self._next_job_id = 1
 
     # -- input -------------------------------------------------------------
@@ -470,71 +514,49 @@ class Pipeline:
                 raise KeyError(f"unknown stage input {key!r}")
             seed_dfs[stage] = self._seed_df(stage, data, job_id)
 
+        # Each rule pins its stage as the graph builds it, upstream
+        # first, so every rule reads pinned upstream leaves.
         out: dict[str, DataFrame] = {}
-        empty = {
-            stage: self.spark.createDataFrame(
-                [], sch.SCHEMAS[STAGE_TABLE_NAMES[stage]]
-            )
-            for stage in ("variant", "hetVariant")
-        }
-
-        def df_for(stage: str) -> DataFrame:
-            return out.get(stage, seed_dfs.get(stage, empty.get(stage)))
-
         graph = DependencyGraph()
 
         def rule(stage: str, fn) -> None:
             def run() -> None:
-                if stage in seed_dfs:
-                    out[stage] = seed_dfs[stage]
-                else:
-                    out[stage] = fn()
-                if self.persist_stages and stage in self.PERSISTED_STAGES:
-                    out[stage] = out[stage].persist()
+                out[stage] = _pin(fn())
             graph.add(stage, run, STAGE_DEPENDENCIES[stage])
 
-        rule("variant", lambda: empty["variant"])
+        rule("variant", lambda: self.spark.createDataFrame(
+            [], sch.SCHEMAS[STAGE_TABLE_NAMES["variant"]]))
         rule("hetVariant", lambda: variant_to_het_variant(
-            self.spark, df_for("variant"), self.ref, self.max_het_snps))
+            self.spark, out["variant"], self.ref, self.max_het_snps))
 
         def build_haplotypes() -> DataFrame:
-            classified = _classified_haplotype_groups(
-                df_for("variant"), df_for("hetVariant"), self.ref
-            )
-            if self.persist_stages:
-                # Both outputs branch off the classification; persist the
-                # shared prefix so novelHaplotype doesn't redo the division.
-                classified = classified.persist()
-            gh = classified.filter(F.col("n_survivors") == 1).select(
-                "job_id", "patient_id", "physical_chromosome", "het_combo",
-                "het_combos", "gene_name", "haplotype_name",
-            )
-            novel = classified.filter(F.col("n_survivors") == 0).select(
-                "job_id", "patient_id", "physical_chromosome", "het_combo",
-                "het_combos", "gene_name",
-            )
-            out["novelHaplotype"] = seed_dfs.get("novelHaplotype", novel)
+            # Both outputs branch off one classification: pin it so
+            # novelHaplotype doesn't redo the division.
+            gh, novel = _split_classified(_pin(_classified_haplotype_groups(
+                out["variant"], out["hetVariant"], self.ref)))
+            if "novelHaplotype" not in seed_dfs:
+                out["novelHaplotype"] = _pin(novel)
             return gh
 
         rule("geneHaplotype", build_haplotypes)
         graph.add("novelHaplotype", None, ["geneHaplotype"])
         rule("genotype",
-             lambda: gene_haplotype_to_genotype(df_for("geneHaplotype")))
+             lambda: gene_haplotype_to_genotype(out["geneHaplotype"]))
         rule("genePhenotype",
-             lambda: genotype_to_gene_phenotype(df_for("genotype"), self.ref))
+             lambda: genotype_to_gene_phenotype(out["genotype"], self.ref))
         rule("phenotypeDrugRecommendation",
              lambda: gene_phenotype_to_phenotype_drug_recommendation(
-                 df_for("genePhenotype"), self.ref))
+                 out["genePhenotype"], self.ref))
         rule("genotypeDrugRecommendation",
              lambda: genotype_to_genotype_drug_recommendation(
-                 df_for("genotype"), self.ref))
+                 out["genotype"], self.ref))
 
         # Build every leaf downstream of the seeded stages
         # (Dependency.groovy:196-201); seeding marks a stage built so its
         # rule and upstream sub-tree are skipped (Pipeline.groovy:671-685).
         built: set[str] = set()
-        for s in seed_dfs:
-            out[s] = seed_dfs[s]
+        for s, df in seed_dfs.items():
+            out[s] = _pin(df)
             built.add(s)
         seeded = set(seed_dfs) or {"variant"}
         targets: list[str] = []

@@ -25,6 +25,16 @@ Spark-first:
   are used — a documented substitution (the stage tables' natural keys
   are unique, haplorec.sql.jinja unique indexes).
 
+Inputs: the reports read the stage DataFrames that ``Pipeline.run_job``
+returns and the caller's ``ReferenceTables``, and pin nothing themselves.
+The chain references some stages several times (the OR-join rewrite alone
+uses its left side three times); that is cheap because ``run_job`` pins
+every stage and ``ReferenceTables`` pins its tables, so each reference
+reads computed blocks, like the reference reading back its MySQL stage
+tables. A pinned block lost with an executor fails the report's job
+(see the pin policy in :mod:`haplorec_spark.pipeline`). Stages from
+parquet (``Pipeline.materialize``) need no pins.
+
 Scale: the join chain is shuffle-keyed on (job_id, patient_id, ...);
 reference tables broadcast. The collapse kernel partitions per job —
 report output is job-scoped and human-readable-sized by construction.
@@ -65,25 +75,6 @@ def _alias_header(prefixed: str) -> str:
     """'jpv__snp_id' -> 'RS#' (strip table prefix, upper-case, alias)."""
     bare = prefixed.split("__", 1)[-1].upper()
     return HEADER_ALIASES.get(bare, bare)
-
-
-def _pin_stages(
-    stages: dict[str, DataFrame], names: Sequence[str]
-) -> dict[str, DataFrame]:
-    """Materialize the stage inputs the report consumes.
-
-    The report chain references some stages several times (the OR-join
-    rewrite alone uses its left side three times); over an
-    un-materialized in-memory pipeline lineage that multiplies the whole
-    upstream plan tree combinatorially. In production the stages are
-    parquet tables (Pipeline.materialize) and this is moot; for
-    DataFrame-to-DataFrame use an eager localCheckpoint pins each stage
-    to its computed partitions, exactly like the reference reading back
-    its materialized MySQL stage tables.
-    """
-    return {
-        name: stages[name].localCheckpoint(eager=True) for name in names
-    }
 
 
 def left_join_prefixed(
@@ -198,12 +189,10 @@ def phenotype_drug_recommendation_report(
 ) -> DataFrame:
     """util/pipeline/Report.groovy:54-114 — how each phenotype-based drug
     recommendation was called, from recommendation back to causal
-    variants, condensed."""
-    stages = _pin_stages(
-        stages,
-        ["phenotypeDrugRecommendation", "genePhenotype", "genotype",
-         "geneHaplotype", "variant"],
-    )
+    variants, condensed.
+
+    ``stages`` are ``run_job``'s pinned outputs (or stage tables read
+    back from the warehouse); ``ref`` is the caller's ReferenceTables."""
     jppdr = stages["phenotypeDrugRecommendation"].filter(
         F.col("job_id") == job_id
     )
@@ -295,12 +284,8 @@ def genotype_drug_recommendation_report(
     stages: dict[str, DataFrame], ref: ReferenceTables, job_id: int
 ) -> DataFrame:
     """util/pipeline/Report.groovy:119-176 — genotype-based variant of
-    the condensed recommendation report."""
-    stages = _pin_stages(
-        stages,
-        ["genotypeDrugRecommendation", "genotype", "geneHaplotype",
-         "variant"],
-    )
+    the condensed recommendation report; inputs as for
+    :func:`phenotype_drug_recommendation_report`."""
     jpgdr = stages["genotypeDrugRecommendation"].filter(
         F.col("job_id") == job_id
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from haplorec_spark.pipeline import Pipeline
+from haplorec_spark.pipeline import STAGE_DEPENDENCIES, Pipeline
 from tests.conftest import rows
 from tests.fixtures import AMBIGUOUS_GHV, GENOTYPE_PHENOTYPE, GPDR, make_ref
 
@@ -327,3 +327,58 @@ def test_duplicate_drug_recommendation_paths(spark):
     check(out, "genePhenotype", [(1, "patient1", "g1", "homozygote normal")])
     check(out, "genotypeDrugRecommendation", [(1, "patient1", 1)])
     check(out, "phenotypeDrugRecommendation", [(1, "patient1", 1)])
+
+
+# -- pin policy and eager failure (Pipeline.groovy:554-687) ----------------
+
+def test_run_job_pins_every_stage(spark):
+    """run_job computes each stage once: every returned stage, the seeded
+    variant input included, is a single pinned leaf whose plan holds no
+    join, aggregate or exchange, and the reference's gene_snp view is
+    derived once."""
+    ref = make_ref(
+        spark,
+        ghv=AMBIGUOUS_GHV,
+        genotype_phenotype=GENOTYPE_PHENOTYPE,
+        gene_phenotype_drug_recommendation=GPDR,
+        genotype_drug_recommendation=[("g1", "*1", "*1", 1)],
+    )
+    out = Pipeline(spark, ref).run_job(variants=[
+        ("patient1", "A", "rs1", "A", "hom"),
+        ("patient1", "B", "rs1", "A", "hom"),
+        ("patient1", "A", "rs2", "G", "hom"),
+        ("patient1", "B", "rs2", "G", "hom"),
+        ("patient2", "A", "rs1", "A", "het"),
+        ("patient2", "B", "rs1", "G", "het"),
+        ("patient2", "A", "rs2", "G", "hom"),
+        ("patient2", "B", "rs2", "G", "hom"),
+    ])
+    assert sorted(out) == sorted(STAGE_DEPENDENCIES)
+    for stage, df in out.items():
+        qe = df._jdf.queryExecution()
+        plan = qe.optimizedPlan()
+        assert plan.nodeName() == "LogicalRDD", (stage, plan.toString())
+        assert plan.children().size() == 0, (stage, plan.toString())
+        # a list-built input is a LogicalRDD leaf too, but not a computed one
+        assert plan.rdd().isCheckpointed(), stage
+        physical = qe.executedPlan().toString()
+        for op in ("Join", "Aggregate", "Exchange"):
+            assert op not in physical, (stage, physical)
+    check(out, "genotype", [
+        (1, "patient1", "g1", "*1", "*1"),
+        (1, "patient2", "g1", "*1", "*3"),
+    ])
+    assert ref.gene_snp() is ref.gene_snp()
+
+
+def test_run_job_raises_on_invalid_het_input(spark):
+    """A het SNP without exactly two alleles fails run_job itself, as the
+    reference fails inside runJob (Algorithm.groovy:76-85), not a later
+    action on the returned stages."""
+    pipe = Pipeline(spark, make_ref(spark, ghv=AMBIGUOUS_GHV))
+    with pytest.raises(Exception, match="saw rs1 with 1 variants"):
+        pipe.run_job(variants=[
+            ("patient1", "A", "rs1", "A", "het"),
+            ("patient1", "A", "rs2", "G", "hom"),
+            ("patient1", "B", "rs2", "G", "hom"),
+        ])

@@ -1,10 +1,15 @@
 """Variant/DSV source tests (PipelineInput.groovy semantics).
 
-Uses a synthetic 9-column genotyping export plus the reference's real
-input file /root/reference/test/in/2_samples.txt (read-only fixture).
+Uses synthetic 9-column genotyping exports: small ones written per test,
+and ``tests/data/genotyping_export.txt``, a two-sample export in the
+layout of the reference's test input ``test/in/2_samples.txt``. The same
+checks run on that real file when ``HAPLOREC_REFERENCE`` names a
+checkout of the reference haplorec repository; otherwise they skip.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -107,15 +112,28 @@ def test_stage_source_gene_phenotype(spark, tmp_path):
     assert rows(df) == [("p1", "g1", "slow")]
 
 
-def test_reference_two_samples_file(spark):
-    df = variant_source(spark, "/root/reference/test/in/2_samples.txt")
-    got = nrows(df)
-    samples = {r[0] for r in got}
-    assert samples == {"1063-117507", "1064-117508"}
-    # every call in the file is a single-char hom or 2-char het
-    by_zyg = {}
-    for r in got:
-        by_zyg[r[4]] = by_zyg.get(r[4], 0) + 1
+#: Two samples; every call is a single-char hom, a 2-char het or a
+#: no-call, on chr-style assay ids that match no gene of ``_file_ref``.
+EXPORT_FIXTURE = os.path.join(
+    os.path.dirname(__file__), "data", "genotyping_export.txt"
+)
+
+REFERENCE_EXPORT = os.path.join(
+    os.environ.get("HAPLOREC_REFERENCE", ""), "test", "in", "2_samples.txt"
+)
+needs_reference_export = pytest.mark.skipif(
+    not (os.environ.get("HAPLOREC_REFERENCE")
+         and os.path.exists(REFERENCE_EXPORT)),
+    reason="reads the reference's real genotyping export test/in/"
+    "2_samples.txt; set HAPLOREC_REFERENCE to a checkout of the "
+    "reference haplorec repository to run it",
+)
+
+
+def check_export_shape(got, samples):
+    """Normalized rows of a genotyping export whose calls are each a
+    single-char hom, a 2-char het or a no-call."""
+    assert {r[0] for r in got} == samples
     # hom rows are duplicated onto chromosomes A and B
     hom_rows = [r for r in got if r[4] == "hom"]
     assert all(r[1] in ("A", "B") for r in hom_rows)
@@ -125,6 +143,35 @@ def test_reference_two_samples_file(spark):
     het_rows = [r for r in got if r[4] == "het"]
     assert all(r[1] is None for r in het_rows)
     assert len(het_rows) % 2 == 0
+
+
+def test_export_fixture(spark):
+    """Header detection, hom rows copied to A/B, het pairs and no-calls
+    on the synthetic two-sample export."""
+    got = nrows(variant_source(spark, EXPORT_FIXTURE))
+    check_export_shape(got, {"1001-200001", "1002-200002"})
+    assert got == sorted([
+        ("1001-200001", "A", "chr1_117098850", "A", "hom"),
+        ("1001-200001", "B", "chr1_117098850", "A", "hom"),
+        ("1002-200002", None, "chr1_117098850", "A", "het"),
+        ("1002-200002", None, "chr1_117098850", "G", "het"),
+        ("1001-200001", None, "chr10_96541616", "C", "het"),
+        ("1001-200001", None, "chr10_96541616", "T", "het"),
+        ("1002-200002", "A", "chr10_96541616", "C", "hom"),
+        ("1002-200002", "B", "chr10_96541616", "C", "hom"),
+        ("1001-200001", "A", "chr22_42522613", "G", "hom"),
+        ("1001-200001", "B", "chr22_42522613", "G", "hom"),
+        ("1002-200002", None, "chr22_42522613", None, None),
+        ("1001-200001", None, "chr7_99361466", None, None),
+        ("1002-200002", None, "chr7_99361466", "A", "het"),
+        ("1002-200002", None, "chr7_99361466", "T", "het"),
+    ], key=lambda t: tuple("" if v is None else str(v) for v in t))
+
+
+@needs_reference_export
+def test_reference_two_samples_file(spark):
+    got = nrows(variant_source(spark, REFERENCE_EXPORT))
+    check_export_shape(got, {"1063-117507", "1064-117508"})
 
 
 # -- file-input -> pipeline integration (PipelineTest.groovy:218-503) -------
@@ -147,20 +194,26 @@ def _file_ref(spark):
     )
 
 
-def test_real_variants_file_through_pipeline(spark):
-    """testDrugRecommendationsRealVariants (PipelineTest.groovy:218-258):
-    the real export seeds the variant stage; its chr-style SNPs match no
+def check_export_through_pipeline(spark, path):
+    """The export seeds the variant stage; its chr-style SNPs match no
     gene, so downstream stages are empty but the job completes."""
     from haplorec_spark.pipeline import Pipeline
 
-    variants = variant_source(
-        spark, "/root/reference/test/in/2_samples.txt",
-        skip_empty_alleles=True,
-    )
+    variants = variant_source(spark, path, skip_empty_alleles=True)
     out = Pipeline(spark, _file_ref(spark)).run_job(variants=variants)
     assert out["variant"].count() == variants.count()
     assert out["geneHaplotype"].count() == 0
     assert out["phenotypeDrugRecommendation"].count() == 0
+
+
+def test_export_fixture_through_pipeline(spark):
+    check_export_through_pipeline(spark, EXPORT_FIXTURE)
+
+
+@needs_reference_export
+def test_real_variants_file_through_pipeline(spark):
+    """testDrugRecommendationsRealVariants (PipelineTest.groovy:218-258)."""
+    check_export_through_pipeline(spark, REFERENCE_EXPORT)
 
 
 def test_input_genotypes_file(spark, tmp_path):
